@@ -28,29 +28,24 @@ the unseeded-rand hazard of SURVEY.md §4; ours is reproducible). All
 pool orderings tie-break by (dist, id) exactly like the reference's
 Neighbor ordering (include/commom/neighbor.h:24-34).
 
-Scale design: the candidate-pair generation is a per-vertex self-join of
+Scale design: the candidate-pair generation is a per-vertex local join of
 bounded sample lists (<= 2S ids per vertex -> <= (2S)^2 pairs), so the
-superstep's join volume is N * O(S^2) — independent of hub structure; the
-reverse-list reservoir cap is the skew bound (J8 in SURVEY.md §2.3). The
-distance kernel gathers both embeddings via two co-partitioned joins
-against the (persisted, bucketed-by-id) vector table and evaluates inside
-an Arrow batch with one numpy expression.
+superstep's candidate volume is N * O(S^2) — independent of hub
+structure; the reverse-list reservoir cap is the skew bound (J8 in
+SURVEY.md §2.3). One superstep runs as grouped Arrow kernels over hash
+blocks of vertices: operators/nnd_fused scores against a broadcast
+float32 matrix, operators/nnd_blocked against the matrix sharded into
+cogrouped blocks (bit-identical output). This module holds the front
+door (nn_descent), the random initializer, the control truth for the
+recall stop and the brute-force oracle.
 """
 
 from __future__ import annotations
-
-import time
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-
-from kgraph_framework_spark.plans.pregel import (
-    reclaim_shuffles,
-    release_state,
-    truncate_state,
-)
 
 
 def _hash_order(*cols):
@@ -167,7 +162,8 @@ SCORE_BROADCAST_BYTES = 512 << 20
 #: [12.8, 25.6] MB; the cap sits at its geometric midpoint ~18 MB,
 #: rounded to 16 MB.
 AUTO_FUSED_MAX_BYTES = 16 << 20
-#: ...and below this vector count the join path wins instead: the
+#: ...and below this vector count join scoring (_score_pairs without a
+#: broadcast) wins instead: the
 #: saved embedding shuffle is tiny while the extra mapInPandas stage
 #: per scoring call costs a fixed ~0.5-1 s (measured at 2k vecs:
 #: broadcast 46 s vs join 38 s for a 10-round build; at 100k vecs
@@ -269,7 +265,6 @@ def nn_descent(
     exclude_pairs: DataFrame | None = None,
     mode: str = "auto",
     payload: str = "fp32",
-    rev_push_gate: bool = False,
     min_recall: float | None = None,
     control: DataFrame | None = None,
     n_control: int = 200,
@@ -303,52 +298,36 @@ def nn_descent(
     else the BLOCKED loop (operators/nnd_blocked — same kernels, matrix
     sharded into cogrouped blocks, no broadcast: the 100-TB shape, and
     the faster one on big corpora); "blocked" forces the blocked loop
-    at any size;
-    "fused" asserts the broadcast fits; "join" forces the legacy
-    join-based loop below (kept as the cross-checked slow path).
-
-    ``payload="fp16"`` (blocked loop only) ships gathered vectors as
-    float16 — halves the dominant matrix shuffle edges for ~2^-11
-    distance rounding. Forces the blocked path so the knob is never
-    silently ignored.
+    at any size; "fused" asserts the broadcast fits. Both loops return
+    bit-identical graphs.
 
     ``payload="int8"`` (blocked loop only) ships per-vector-scaled int8
-    codes — ~4x fewer bytes on the same edges (~0.4%-of-max rounding
-    during the descent) — and finishes with an EXACT fp32 re-rank of
-    each pool's top min(L, 2k) band, so the returned graph's distances
-    and ordering are exact fp32 arithmetic (the quantized-retrieve /
-    exact-rerank contract). Like fp16 this is a network lever for
-    byte-bound clusters: local wall is shuffle-page-cache-bound and
-    measured payload-insensitive (BENCH.md fp16 A/B).
-
-    ``rev_push_gate`` (fused/blocked loops; default OFF) applies the
-    reference's reverse-push gate — a reverse sample reaches the
-    receiver's candidate lists only when its distance exceeds the
-    receiver's round-start pool worst (src/index_graph.cpp:90-103) —
-    shrinking pairgen volume as pools converge. Measured (BENCH.md
-    reverse-push-gate A/B): in this dataflow the gate's sentinel rows
-    cost wall in early rounds and the pruned reverse samples delay
-    convergence by ~1-3 rounds at equal recall, so end-to-end it is
-    wall-neutral at 500k and ~1.5x slower at 50k on this host — the
-    candidate-byte cut is a network lever for real clusters, like
-    payload="fp16". Default off; flip on for strict reference parity
-    or network-bound deployments. The join loop keeps ungated
-    reference-paper semantics.
+    codes — ~4x fewer bytes on the dominant matrix shuffle edges
+    (~0.4%-of-max rounding during the descent) — and finishes with an
+    EXACT fp32 re-rank of each pool's top min(L, 2k) band, so the
+    returned graph's distances and ordering are exact fp32 arithmetic
+    (the quantized-retrieve / exact-rerank contract). A network lever
+    for byte-bound clusters: local wall is shuffle-page-cache-bound and
+    measured payload-insensitive (BENCH.md).
 
     ``min_recall`` enables the reference's OWN convergence criterion
     (src/index_graph.cpp:172-179): each round, the sampled recall of
     the pool vs exact control truth is evaluated, and the loop stops
     once it reaches the threshold (the reference uses 0.99) — so
-    like-for-like runs can terminate exactly like the reference
+    like-for-like runs can terminate on the reference's criterion
     instead of on a fixed round count. ``control`` supplies the
     precomputed truth (src, dst) — compute it with
     :func:`control_truth` BEFORE any build timer, as the reference
     loads its ground-truth file outside the timed build; left None,
-    nn_descent computes it here (one N x n_control broadcast scan).
-    Per-round metrics gain ``recall`` and ``recall_eval_sec`` rows
-    (eval time kept separate, like the reference's per-iter walls).
-    The update-rate stop remains active; pass ``min_update_rate=0``
-    for pure reference semantics.
+    nn_descent computes it here (one N x n_control broadcast scan). An
+    empty control set raises ValueError. Per-round metrics gain
+    ``recall`` and ``recall_eval_sec`` rows (eval time kept separate,
+    like the reference's per-iter walls); every round row carries
+    ``recall_stop``, True on the round that stopped on the criterion.
+    The update-rate stop remains active; pass ``min_update_rate=0`` to
+    stop on recall alone — the same criterion, checked after each
+    round with ``>=`` (the reference tests ``>`` at the top of each
+    round, including once before the first).
 
     ``block_bytes`` (blocked loop only; default
     nnd_blocked.EMB_BLOCK_BYTES) sets the embedding-block size — the
@@ -356,12 +335,20 @@ def nn_descent(
     here: per-round gather bytes ~ (corpus_bytes / block_bytes) x
     corpus, so larger blocks cut single-box scratch-disk quadratically
     at higher per-task working memory (BENCH.md high-dim section).
+
+    ``payload`` and ``block_bytes`` force the blocked loop under "auto"
+    and raise ValueError under "fused", so neither is silently ignored.
     """
-    if payload not in ("fp32", "fp16", "int8"):
+    if payload not in ("fp32", "int8"):
         raise ValueError(f"unknown payload {payload!r}")
-    if payload != "fp32":
-        if mode in ("fused", "join"):
-            raise ValueError(f"payload={payload!r} requires the blocked loop")
+    if mode not in ("auto", "fused", "blocked"):
+        raise ValueError(f"unknown mode {mode!r}")
+    if payload != "fp32" or block_bytes is not None:
+        if mode == "fused":
+            raise ValueError(
+                f"payload={payload!r} / block_bytes={block_bytes!r} "
+                "require the blocked loop"
+            )
         mode = "blocked"
     if l is None:
         l = 3 * k
@@ -369,7 +356,6 @@ def nn_descent(
         s = max(3, (3 * k) // 2)
     emb = emb.select("vec_id", "embedding").persist()
     control_pdf = None
-    control_df = None
     control_total = 0
     if min_recall is not None:
         truth = control if control is not None else control_truth(
@@ -377,14 +363,14 @@ def nn_descent(
         )
         control_pdf = truth.select("src", "dst").toPandas()
         control_total = len(control_pdf)
-        if control_total:
-            control_df = spark.createDataFrame(
-                control_pdf, "src long, dst long"
-            )
-    n_edges_target = None
+        if not control_total:
+            emb.unpersist()
+            raise ValueError("min_recall is set but the control set is empty")
     bc = None
     if mode == "fused":
         bc = broadcast_matrix(emb, min_vecs=1)
+        if bc is None:
+            raise ValueError("mode='fused' but corpus exceeds broadcast cap")
     elif mode == "auto":
         # measured crossover, not the broadcast CAP: past ~16 MB the
         # blocked loop beats the fused one even though the matrix
@@ -392,209 +378,59 @@ def nn_descent(
         bc = broadcast_matrix(
             emb, limit_bytes=AUTO_FUSED_MAX_BYTES, min_vecs=1
         )
-    if mode == "fused" and bc is None:
-        raise ValueError("mode='fused' but corpus exceeds broadcast cap")
-    if bc is not None or mode in ("blocked", "auto"):
-        from kgraph_framework_spark.operators.nnd_fused import (
-            nn_descent_fused,
-            topk_per_src,
+
+    if bc is None:
+        # beyond the crossover (or forced): same kernels, matrix sharded
+        # into cogrouped blocks — no single-node requirement
+        from kgraph_framework_spark.operators.nnd_blocked import (
+            EMB_BLOCK_BYTES,
+            nn_descent_blocked,
         )
 
-        from kgraph_framework_spark.operators.nnd_fused import auto_n_blocks
+        control_bc = None
+        if control_pdf is not None:
+            from kgraph_framework_spark.operators.nnd_fused import _pack2
 
-        if bc is not None:
-            n_vecs = len(bc.value[0])
-            pool, metrics = nn_descent_fused(
-                spark, emb, bc, k=k, l=l, s=s, max_iters=max_iters,
-                min_update_rate=min_update_rate, seed=seed, init=init,
-                exclude_pairs=exclude_pairs, rev_push_gate=rev_push_gate,
-                min_recall=min_recall, control_df=control_df,
-                control_total=control_total,
+            s_arr = control_pdf["src"].to_numpy(np.int64)
+            d_arr = control_pdf["dst"].to_numpy(np.int64)
+            control_bc = spark.sparkContext.broadcast(
+                (np.unique(s_arr), np.sort(_pack2(s_arr, d_arr)))
             )
-        else:
-            # beyond the broadcast cap (or forced): same kernels, matrix
-            # sharded into cogrouped blocks — no single-node requirement
-            from kgraph_framework_spark.operators.nnd_blocked import (
-                nn_descent_blocked,
-            )
-
-            control_bc = None
-            if control_pdf is not None and len(control_pdf):
-                from kgraph_framework_spark.operators.nnd_fused import _pack2
-
-                s_arr = control_pdf["src"].to_numpy(np.int64)
-                d_arr = control_pdf["dst"].to_numpy(np.int64)
-                control_bc = spark.sparkContext.broadcast(
-                    (np.unique(s_arr), np.sort(_pack2(s_arr, d_arr)))
-                )
-            # final_k: the packed merge already leaves each block's pool
-            # per-src sorted and deduped, so the blocked loop cuts top-k
-            # in place while unpacking — no extra topk shuffle
-            bb = {}
-            if block_bytes is not None:
-                bb["block_bytes"] = block_bytes
-            graph, metrics = nn_descent_blocked(
-                spark, emb, k=k, l=l, s=s, max_iters=max_iters,
-                min_update_rate=min_update_rate, seed=seed, init=init,
-                exclude_pairs=exclude_pairs, final_k=k, payload=payload,
-                rev_push_gate=rev_push_gate,
-                min_recall=min_recall, control_bc=control_bc,
-                control_total=control_total, **bb,
-            )
-            if control_bc is not None:
-                control_bc.unpersist()
-            emb.unpersist()
-            return graph, metrics
-        B = auto_n_blocks(
-            spark.sparkContext.defaultParallelism, n_vecs, l
+        # final_k: the packed merge already leaves each block's pool
+        # per-src sorted and deduped, so the blocked loop cuts top-k
+        # in place while unpacking — no extra topk shuffle
+        graph, metrics = nn_descent_blocked(
+            spark, emb, k=k, l=l, s=s, max_iters=max_iters,
+            min_update_rate=min_update_rate, seed=seed, init=init,
+            exclude_pairs=exclude_pairs, final_k=k, payload=payload,
+            min_recall=min_recall, control_bc=control_bc,
+            control_total=control_total,
+            block_bytes=EMB_BLOCK_BYTES if block_bytes is None else block_bytes,
         )
-        graph = topk_per_src(pool.select("src", "dst", "dist"), k, B)
-        if bc is not None:
-            bc.unpersist()
+        if control_bc is not None:
+            control_bc.unpersist()
         emb.unpersist()
         return graph, metrics
 
-    pool = init if init is not None else random_init(emb, k, seed)
-    # score the init (reference scores on first refine pass)
-    scored = _score_pairs(
-        pool.select(F.col("src").alias("a"), F.col("dst").alias("b")), emb, bc
+    from kgraph_framework_spark.operators.nnd_fused import (
+        auto_n_blocks,
+        nn_descent_fused,
+        topk_per_src,
     )
-    pool = scored.select(
-        F.col("a").alias("src"), F.col("b").alias("dst"), "dist",
-        F.lit(True).alias("is_new"),
+
+    control_df = None
+    if control_pdf is not None:
+        control_df = spark.createDataFrame(control_pdf, "src long, dst long")
+    pool, metrics = nn_descent_fused(
+        spark, emb, bc, k=k, l=l, s=s, max_iters=max_iters,
+        min_update_rate=min_update_rate, seed=seed, init=init,
+        exclude_pairs=exclude_pairs,
+        min_recall=min_recall, control_df=control_df,
+        control_total=control_total,
     )
-    pool = truncate_state(spark, pool)
-    metrics: list[dict] = []
-    n_vecs_join = emb.count()  # emb persisted above; gates reclaim
-
-    for it in range(max_iters):
-        t_round = time.monotonic()
-        # --- sample S new and S old per vertex: TOP-OF-POOL, the S
-        # closest per flag by (dist, dst) — the reference scans pools in
-        # ascending distance order (update(), :62-77) ---
-        sampled = pool.withColumn("srn", F.row_number().over(
-            Window.partitionBy("src", "is_new").orderBy("dist", "dst")
-        )).where(F.col("srn") <= s)
-
-        fwd = sampled.select("src", "dst", "is_new")
-        # forward-sampled NEW pairs: exactly these get their flag cleared
-        # after the join (reference clears flags of the sampled nn_new
-        # only, src/index_graph.cpp:88-111 — unsampled new entries keep
-        # their flag and get another chance next round)
-        joined_now = fwd.where(F.col("is_new")).select("src", "dst")
-        # reverse lists with reservoir cap S (J8, :78-113)
-        rev = (
-            fwd.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst"), "is_new"
-            )
-            .withColumn(
-                "rrn",
-                F.row_number().over(
-                    Window.partitionBy("src", "is_new").orderBy(
-                        _hash_order(F.col("dst"), F.lit(seed + it * 3 + 2))
-                    )
-                ),
-            )
-            .where(F.col("rrn") <= s)
-            .drop("rrn")
-        )
-        lists = fwd.unionByName(rev).dropDuplicates(["src", "dst", "is_new"])
-
-        # --- local join: new x new (a<b) + new x old (neighbor.h:86-98) ---
-        ln = lists.where(F.col("is_new")).select("src", F.col("dst").alias("a"))
-        lo = lists.where(~F.col("is_new")).select("src", F.col("dst").alias("b"))
-        nn = (
-            ln.join(ln.select("src", F.col("a").alias("b")), "src")
-            .where(F.col("a") < F.col("b"))
-        )
-        no = ln.join(lo, "src").where(F.col("a") != F.col("b"))
-        pairs = (
-            nn.select("a", "b").unionByName(no.select("a", "b")).distinct()
-        )
-        if exclude_pairs is not None:
-            # canonical-order anti-join: (a,b) and (b,a) both skip
-            pairs = (
-                pairs.withColumn("ca", F.least("a", "b"))
-                .withColumn("cb", F.greatest("a", "b"))
-                .join(
-                    exclude_pairs.select(
-                        F.least("a", "b").alias("ca"),
-                        F.greatest("a", "b").alias("cb"),
-                    ).distinct(),
-                    ["ca", "cb"],
-                    "left_anti",
-                )
-                .select("a", "b")
-            )
-
-        scored = _score_pairs(pairs, emb, bc)
-        sym = scored.unionByName(
-            scored.select(
-                F.col("b").alias("a"), F.col("a").alias("b"), "dist"
-            )
-        ).select(F.col("a").alias("src"), F.col("b").alias("dst"), "dist")
-
-        # --- merge into pools, re-topL, maintain flags ---
-        old_pool = pool.select("src", "dst", "dist")
-        merged = old_pool.unionByName(sym).groupBy("src", "dst").agg(
-            F.min("dist").alias("dist")
-        )
-        wtop = Window.partitionBy("src").orderBy("dist", "dst")
-        topl = merged.withColumn("rn", F.row_number().over(wtop)).where(
-            F.col("rn") <= l
-        ).drop("rn")
-        new_pool = (
-            topl.join(
-                pool.select("src", "dst", F.col("is_new").alias("old_new")),
-                ["src", "dst"],
-                "left",
-            )
-            .join(
-                joined_now.withColumn("joined", F.lit(True)),
-                ["src", "dst"],
-                "left",
-            )
-            .select(
-                "src", "dst", "dist",
-                F.when(F.col("old_new").isNull(), F.lit(True))  # fresh insert
-                .otherwise(F.col("old_new") & F.col("joined").isNull())
-                .alias("is_new"),
-                F.col("old_new").isNull().alias("fresh"),
-            )
-        )
-        new_pool = truncate_state(spark, new_pool)
-        updates = new_pool.where(F.col("fresh")).count()
-        release_state(pool)
-        reclaim_shuffles(spark, n_vecs_join)
-        if n_edges_target is None:
-            n_edges_target = new_pool.count()
-        rate = updates / max(n_edges_target, 1)
-        row_m = {"superstep": it, "new_entries": int(updates),
-                 "update_rate": rate,
-                 "wall_sec": round(time.monotonic() - t_round, 2)}
-        pool = new_pool
-        recall_stop = False
-        if min_recall is not None and control_df is not None:
-            t_ev = time.monotonic()
-            hits = pool.join(
-                F.broadcast(control_df), ["src", "dst"], "left_semi"
-            ).count()
-            rec = hits / max(control_total, 1)
-            row_m["recall"] = round(rec, 4)
-            row_m["recall_eval_sec"] = round(time.monotonic() - t_ev, 2)
-            recall_stop = rec >= min_recall
-        metrics.append(row_m)
-        if recall_stop or rate < min_update_rate:
-            break
-
-    wk = Window.partitionBy("src").orderBy("dist", "dst")
-    graph = (
-        pool.withColumn("rn", F.row_number().over(wk))
-        .where(F.col("rn") <= k)
-        .select("src", "dst", "dist")
-    )
-    if bc is not None:
-        bc.unpersist()  # non-destructive: re-ships lazily if re-referenced
+    B = auto_n_blocks(spark.sparkContext.defaultParallelism, len(bc.value[0]), l)
+    graph = topk_per_src(pool.select("src", "dst", "dist"), k, B)
+    bc.unpersist()
     emb.unpersist()
     return graph, metrics
 
@@ -616,11 +452,20 @@ def control_truth(
     compute this BEFORE the timer (as the reference does) and pass it
     via ``nn_descent(control=...)``.
 
-    Deterministic: control ids are every (n // n_control)-th vec_id.
+    Deterministic: control ids are every (n // n_control)-th vec_id in
+    ascending id order — sampled on the dense rank (id_index) when the
+    ids are gapped or offset, so any id space yields ~n_control points.
     """
-    n, _ = id_stats(emb)
+    n, contiguous = id_stats(emb)
     stride = max(1, n // n_control)
-    qdf = emb.where(F.col("vec_id") % stride == 0).toPandas()
+    if contiguous:
+        picked = emb.where(F.col("vec_id") % stride == 0)
+    else:
+        picked = emb.join(
+            id_index(emb).where(F.col("ridx") % stride == 0).select("vec_id"),
+            "vec_id",
+        )
+    qdf = picked.toPandas()
     qids = qdf["vec_id"].to_numpy(np.int64)
     q = np.stack(qdf["embedding"].to_numpy()).astype(np.float64)
     bq = spark.sparkContext.broadcast((qids, q))

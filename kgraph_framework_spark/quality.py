@@ -137,9 +137,10 @@ def nndescent_minrecall_gate(
     :209-229) — instead of a fixed round count
     (nn_descent(min_recall=0.99), the update-rate stop disabled).
     recall_ok = 1 only if BOTH hold: the final graph clears the recall
-    floor AND the loop actually STOPPED on the criterion (fewer than
-    max_iters rounds with the last recorded pool recall >= 0.99) — a
-    loop that merely exhausts its iteration budget fails the gate."""
+    floor AND the loop actually STOPPED on the criterion (the last
+    round's ``recall_stop`` flag, set even when that round is the
+    max_iters-th) — a loop that merely exhausts its iteration budget
+    fails the gate."""
     from kgraph_framework_spark.operators.knn_graph import (
         knn_bruteforce_l2,
         nn_descent,
@@ -149,10 +150,7 @@ def nndescent_minrecall_gate(
         spark, emb, k=k, max_iters=max_iters, min_recall=0.99,
         min_update_rate=0.0,
     )
-    stopped = (
-        len(metrics) < max_iters
-        and metrics[-1].get("recall", 0.0) >= 0.99
-    )
+    stopped = metrics[-1]["recall_stop"]
     truth = knn_bruteforce_l2(emb, k=k)
     row = _gate_row(
         graph.select("src", "dst"),

@@ -156,9 +156,38 @@ class TestMinRecallConvergence:
         assert "recall" in metrics[-1] and "recall_eval_sec" in metrics[-1]
         assert metrics[-1]["recall"] >= 0.3
         assert len(metrics) < 8, "should stop on recall, not iter count"
+        assert metrics[-1]["recall_stop"]
         # earlier rounds below the threshold must NOT have stopped
         for m in metrics[:-1]:
-            assert m["recall"] < 0.3
+            assert m["recall"] < 0.3 and not m["recall_stop"]
+        # stopping on the last allowed round is still a recall stop
+        _, again = nn_descent(
+            spark, emb, k=K, max_iters=len(metrics), min_recall=0.3
+        )
+        assert len(again) == len(metrics) and again[-1]["recall_stop"]
+
+    def test_control_truth_on_gapped_ids(self, spark, emb):
+        """All-odd ids: control points are sampled on the dense rank, so
+        the recall stop stays armed; an empty control set raises instead
+        of silently disabling it."""
+        from kgraph_framework_spark.operators.knn_graph import control_truth
+
+        odd = emb.select(
+            (F.col("vec_id") * 2 + 1).alias("vec_id"), "embedding"
+        ).persist()
+        ct = control_truth(spark, odd, K).persist()
+        assert ct.select("src").distinct().count() >= 50
+        _, m = nn_descent(
+            spark, odd, k=K, max_iters=1, min_recall=1.01, control=ct
+        )
+        assert m[0]["recall"] > 0.0
+        with pytest.raises(ValueError):
+            nn_descent(
+                spark, odd, k=K, max_iters=1, min_recall=0.5,
+                control=ct.limit(0),
+            )
+        ct.unpersist()
+        odd.unpersist()
 
     def test_blocked_recall_equals_fused(self, spark, emb):
         """packed_pool_recall (blocked) and the broadcast semi-join

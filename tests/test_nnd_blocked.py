@@ -364,72 +364,22 @@ class TestTauFilter:
 
 
 class TestFp16Payload:
-    """payload="fp16" halves every matrix byte-edge of the blocked loop
-    (block shuffle, replicated hi cells, gathered u_mat packs) for
-    ~2^-11-relative distance rounding. fp32 must stay byte-exact."""
-
-    def test_fp16_blocks_half_bytes_and_decode(self, spark, emb):
-        from kgraph_framework_spark.operators.nnd_blocked import _mat_decode
-
-        f32 = build_emb_blocks(emb, 3).collect()
-        f16 = build_emb_blocks(emb, 3, payload="fp16").collect()
-        by_g32 = {r["g"]: r for r in f32}
-        assert len(f16) == len(f32)
-        for r in f16:
-            r32 = by_g32[r["g"]]
-            assert r["ids"] == r32["ids"]
-            assert len(r["mat"]) * 2 == len(r32["mat"])
-            X16 = _mat_decode(r["mat"], len(r["ids"]), r["dim"])
-            X32 = _mat_decode(r32["mat"], len(r32["ids"]), r32["dim"])
-            assert X16.dtype == np.float16 and X32.dtype == np.float32
-            assert np.array_equal(X16, X32.astype(np.float16))
-
-    def test_fp16_scoring_close(self, spark, emb):
-        """fp16-payload distances approximate the exact fp32 ones within
-        the fp16 rounding envelope, same pair set either way."""
-        ids = [r["vec_id"] for r in emb.select("vec_id").limit(12).collect()]
-        pairs = spark.createDataFrame(
-            [(int(a), int(b)) for a in ids[:6] for b in ids[6:]],
-            "a long, b long",
-        )
-        b32 = build_emb_blocks(emb, 3).persist()
-        b16 = build_emb_blocks(emb, 3, payload="fp16").persist()
-        got32 = {
-            (r["a"], r["b"]): r["dist"]
-            for r in score_pairs_blocked(pairs, b32, 3).collect()
-        }
-        got16 = {
-            (r["a"], r["b"]): r["dist"]
-            for r in score_pairs_blocked(pairs, b16, 3).collect()
-        }
-        b32.unpersist()
-        b16.unpersist()
-        assert set(got16) == set(got32)
-        d32 = np.array([got32[k_] for k_ in sorted(got32)])
-        d16 = np.array([got16[k_] for k_ in sorted(got32)])
-        # squared-L2 of fp16-rounded inputs: ~2*2^-11 relative + tiny abs
-        assert np.allclose(d16, d32, rtol=5e-3, atol=1e-4)
-        assert not np.array_equal(d16, d32)  # rounding actually happened
-
-    def test_fp16_recall_floor(self, spark, emb):
-        """The approximate payload must not dent recall on the fixture:
-        same >=0.9 floor as the exact blocked build."""
-        truth = knn_bruteforce_l2(emb, k=K).persist()
-        g, m = nn_descent(spark, emb, k=K, max_iters=6, payload="fp16")
-        r = graph_recall(g.select("src", "dst"), truth)
-        truth.unpersist()
-        assert r >= 0.9, f"fp16 recall {r:.3f}"
-        assert len(m) >= 1
+    """Blocked-loop-only knobs (payload, block_bytes) force the blocked
+    loop under mode="auto" and are rejected under mode="fused"."""
 
     def test_payload_validation(self, spark, emb):
         with pytest.raises(ValueError):
-            nn_descent(spark, emb, k=K, mode="fused", payload="fp16")
-        with pytest.raises(ValueError):
-            nn_descent(spark, emb, k=K, mode="join", payload="fp16")
-        with pytest.raises(ValueError):
             nn_descent(spark, emb, k=K, mode="fused", payload="int8")
         with pytest.raises(ValueError):
-            nn_descent(spark, emb, k=K, payload="int4")
+            nn_descent(spark, emb, k=K, mode="fused", block_bytes=1 << 20)
+        with pytest.raises(ValueError):
+            nn_descent(spark, emb, k=K, payload="fp16")
+        with pytest.raises(ValueError):
+            nn_descent(spark, emb, k=K, mode="join")
+        # under "auto" block_bytes selects the blocked loop (which
+        # records tau_engaged per round) instead of being ignored
+        _, m = nn_descent(spark, emb, k=K, max_iters=1, block_bytes=1 << 20)
+        assert "tau_engaged" in m[0]
 
 
 class TestInt8Payload:
@@ -516,13 +466,25 @@ class TestInt8Payload:
         truth.unpersist()
         assert bad == 0 and n_edges > 0
 
-    def test_int8_rejects_tiny_dim(self, spark):
+    def test_int8_dim4_roundtrip(self, spark):
+        """int8 rows take dim+4 bytes and fp32 rows 4*dim, which differ
+        at every integer dim — so even dim 4 decodes as int8."""
+        from kgraph_framework_spark.operators.nnd_blocked import _mat_decode
+
         four_d = spark.createDataFrame(
-            [(i, [float(i), 0.0, 1.0, 2.0]) for i in range(8)],
+            [(i, [float(i), 0.0, 1.0, -2.0]) for i in range(8)],
             "vec_id long, embedding array<float>",
         )
-        with pytest.raises(Exception, match="dim > 4"):
-            build_emb_blocks(four_d, 2, payload="int8").collect()
+        rows = build_emb_blocks(four_d, 2, payload="int8").collect()
+        assert sum(len(r["ids"]) for r in rows) == 8
+        for r in rows:
+            n, dim = len(r["ids"]), r["dim"]
+            assert dim == 4 and len(r["mat"]) == n * (dim + 4)
+            Xq = _mat_decode(r["mat"], n, dim)
+            X = np.array([[i, 0.0, 1.0, -2.0] for i in r["ids"]], np.float32)
+            tol = np.abs(X).max(axis=1, keepdims=True) / 254.0 + 1e-12
+            assert Xq.dtype == np.float32
+            assert np.all(np.abs(Xq - X) <= tol)
 
 
 class TestStaticSideExchangeReuse:

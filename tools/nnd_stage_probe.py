@@ -11,13 +11,14 @@ pairgen -> gather-1 -> gather-2 -> merge).
 Usage: python tools/nnd_stage_probe.py [n_vecs] [dim] [rounds] [cores] [tau]
                                        [payload]
 (tau: 1=emit-site threshold filter on [default], 0=off — for the A/B.
-payload: fp32 [default] / fp16 / int8 — for the wire-payload byte A/B;
+payload: fp32 [default] / int8 — for the wire-payload byte A/B;
 shuffle bytes are deterministic, so one run per payload decides it.)
 Prints a per-stage table (desc by executorRunTime) plus one JSON line.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -38,12 +39,20 @@ def _get(url: str):
 
 
 def main() -> None:
-    n_vecs = int(sys.argv[1]) if len(sys.argv) > 1 else 500_000
-    dim = int(sys.argv[2]) if len(sys.argv) > 2 else 128
-    rounds = int(sys.argv[3]) if len(sys.argv) > 3 else 2
-    cores = int(sys.argv[4]) if len(sys.argv) > 4 else 32
-    tau = bool(int(sys.argv[5])) if len(sys.argv) > 5 else True
-    payload = sys.argv[6] if len(sys.argv) > 6 else "fp32"
+    ap = argparse.ArgumentParser(
+        description="Per-stage wall/bytes breakdown of a blocked build"
+    )
+    ap.add_argument("n_vecs", nargs="?", type=int, default=500_000)
+    ap.add_argument("dim", nargs="?", type=int, default=128)
+    ap.add_argument("rounds", nargs="?", type=int, default=2)
+    ap.add_argument("cores", nargs="?", type=int, default=32)
+    ap.add_argument("tau", nargs="?", type=int, choices=(0, 1), default=1,
+                    help="emit-site threshold filter: 1 on, 0 off")
+    ap.add_argument("payload", nargs="?", choices=("fp32", "int8"),
+                    default="fp32", help="wire payload: fp32 or int8")
+    args = ap.parse_args()
+    n_vecs, dim, rounds, cores = args.n_vecs, args.dim, args.rounds, args.cores
+    tau, payload = bool(args.tau), args.payload
 
     from kgraph_framework_spark.operators.nnd_blocked import (
         nn_descent_blocked,
